@@ -128,9 +128,13 @@ def wait_for_clear_window(min_gbps: float = 1.0, max_wait_s: float = 300,
 
 
 def main(argv=None):
+    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    from ebel_spark.session import host_cpus
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--cpus", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+                    default=int(os.environ.get("SPARK_GRAFT_CPUS",
+                                               host_cpus())))
     ap.add_argument("--sf-dir",
                     default=os.environ.get("SPARK_GRAFT_SF_DIR",
                                            "/root/testdata/sf0.1"))
@@ -151,7 +155,6 @@ def main(argv=None):
     ap.add_argument("--json-out", default=None)
     args = ap.parse_args(argv)
 
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from ebel_spark.queries import QUERIES
     from ebel_spark.session import get_spark
 

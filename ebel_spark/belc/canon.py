@@ -19,7 +19,13 @@ import json
 import re
 from typing import Any, Iterator, Optional
 
-from .vocab import BEL_FUNC_SHORT, NORMALIZED_PMOD
+from .vocab import (
+    BEL_FUNC_SHORT,
+    GENE_LIKE_CLASSES,
+    INVOLVED_GENES_EDGES,
+    INVOLVED_OTHER_EDGES,
+    NORMALIZED_PMOD,
+)
 
 _RE_PMID = re.compile(r"^\d+$")
 _RE_EVIDENCE_WS = re.compile(r"\s*\\\s*\n\s*")
@@ -105,6 +111,11 @@ def bel_string(obj: list, parent_function: Optional[str] = None,
 
 _MODIFIER_CLASSES = frozenset({"pmod", "gmod", "variant", "fragment", "location"})
 
+# child classes whose has__<class> edge the involved_genes /
+# involved_other traversals follow (biodbs/bel.py:566-584)
+_GENES_VIA = frozenset(r[len("has__"):] for r in INVOLVED_GENES_EDGES)
+_OTHER_VIA = frozenset(r[len("has__"):] for r in INVOLVED_OTHER_EDGES)
+
 
 def _is_function(obj: Any) -> bool:
     return isinstance(obj, dict) and "function" in obj
@@ -116,25 +127,36 @@ def extract_nodes(
     child_edges: list,
     materialize_modifiers: bool = False,
     memo: Optional[dict] = None,
-) -> tuple[str, str]:
+) -> tuple:
     """Recursively flatten an IR term into node rows + has__<class> edges.
 
-    Returns (node_class, node_id) of the root.  ``nodes`` rows:
-    (node_class, bel, namespace, name, props_json, has_modifiers).
+    Returns (node_class, node_id, genes, other, gene_namespaces) of the
+    root, the last three as iterables.  ``nodes`` rows:
+    (node_class, bel, namespace, name, props_json, has_modifiers,
+    involved_genes, involved_other, gene_namespaces).
+
+    The last three are the term's rollup facts (biodbs/bel.py:419-454,
+    555-598), computed here because a has__* edge only ever links a term
+    to its own subterms: the sorted names of gene-like terms reachable
+    over INVOLVED_GENES_EDGES (the term itself included), the sorted
+    names of named non-gene-like terms reachable over
+    INVOLVED_OTHER_EDGES, and the sorted namespaces of the gene-like
+    terms reachable over INVOLVED_GENES_EDGES.  Leaves carry None: their
+    facts follow from their own class, name and namespace
+    (graph.fill_leaf_facts).
 
     By default modifier terms (pmod/var/frag/loc/gmod) are NOT materialized
     as nodes — this matches the graph-count oracle of the reference test
     suite (/root/reference/tests/test_manager/true_values.py: pmod=0,
     has__pmod=0 after importing a script containing pmod(Ph)).
     """
-    cls = term[0]["function"]["name"]
-    node_class = {"variant": "variant", "fragment": "fragment"}.get(cls, cls)
+    node_class = term[0]["function"]["name"]
     bel = bel_string(term, memo=memo)
     nid = node_id(node_class, bel)
 
     params: dict = {}
     has_modifiers = False
-    children: list[tuple[str, str]] = []
+    children: list[tuple] = []
 
     for e in term[1]:
         if isinstance(e, dict) and "function" not in e:
@@ -164,14 +186,28 @@ def extract_nodes(
     name = params.get("name") or None
     extra = {k: v for k, v in params.items()
              if k not in ("namespace", "name") and v not in (None, "", 0)}
+    gene_like = node_class in GENE_LIKE_CLASSES
+    genes = (name,) if gene_like and name else ()
+    other = (name,) if name and not gene_like else ()
+    nss = (namespace,) if gene_like and namespace else ()
+    facts = (None, None, None)
+    if children:
+        genes, other, nss = set(genes), set(other), set(nss)
+        for child_class, _, c_genes, c_other, c_nss in children:
+            if child_class in _GENES_VIA:
+                genes.update(c_genes)
+                nss.update(c_nss)
+            if child_class in _OTHER_VIA:
+                other.update(c_other)
+        facts = (sorted(genes), sorted(other), sorted(nss))
     nodes.append((
         node_class, bel, namespace, name,
         json.dumps(extra, sort_keys=True) if extra else None,
-        has_modifiers,
+        has_modifiers, *facts,
     ))
-    for child_class, child_id in children:
+    for child_class, child_id, *_ in children:
         child_edges.append((f"has__{child_class}", nid, child_id))
-    return node_class, nid
+    return node_class, nid, genes, other, nss
 
 
 # ---------------------------------------------------------------------------

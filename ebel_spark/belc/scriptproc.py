@@ -40,7 +40,7 @@ def process_file(
             subj = st["subject"]
             subject_class = subject_bel = subject_id = None
             if subj is not None:
-                subject_class, subject_id = extract_nodes(
+                subject_class, subject_id, *_ = extract_nodes(
                     subj, nodes_raw, child_edges_raw, materialize_modifiers,
                     memo)
                 subject_bel = bel_string(subj, memo=memo)
@@ -50,7 +50,7 @@ def process_file(
             relation = st["relation"]
             edge_key = None
             if obj is not None and relation is not None:
-                object_class, object_id = extract_nodes(
+                object_class, object_id, *_ = extract_nodes(
                     obj, nodes_raw, child_edges_raw, materialize_modifiers,
                     memo)
                 object_bel = bel_string(obj, memo=memo)
@@ -92,17 +92,18 @@ def process_file(
     # within-file node dedup: same (class, bel) -> one row, OR the
     # has_modifiers flags (bel string determines modifiers, so flags agree)
     node_map: dict[tuple, list] = {}
-    for node_class, bel, namespace, name, props, has_mods in nodes_raw:
-        key = (node_class, bel)
-        row = node_map.get(key)
-        if row is None:
-            node_map[key] = [node_class, bel, namespace, name, props, has_mods]
-        elif has_mods:
-            row[5] = True
+    for row in nodes_raw:
+        key = row[:2]
+        kept = node_map.get(key)
+        if kept is None:
+            node_map[key] = list(row)
+        elif row[5]:
+            kept[5] = True
     nodes = [
         {"node_class": c, "bel": b, "namespace": ns, "name": nm,
-         "props": pr, "has_modifiers": hm}
-        for c, b, ns, nm, pr, hm in node_map.values()
+         "props": pr, "has_modifiers": hm, "involved_genes": ig,
+         "involved_other": io, "gene_namespaces": gn}
+        for c, b, ns, nm, pr, hm, ig, io, gn in node_map.values()
     ]
 
     child_edges = [

@@ -14,6 +14,14 @@ DataFrame algebra:
 - protein->rna->gene generation  <- biodbs/bel.py:622-674
 - involved_genes/involved_other rollup  <- biodbs/bel.py:555-598
 - species tagging <- biodbs/bel.py:419-454
+
+The rollup walks a node's has__* subterm edges, and those only ever link a
+term to its own subterms, so the compiler computes each term's reachable
+gene names, other names and gene namespaces (belc.canon.extract_nodes);
+`rollup_facts` turns them into involved_genes / involved_other / species
+with one join.  `descendant_closure`, `involved_rollup` and
+`species_tagging` are the same rollup as a distributed closure over the
+structural edges, kept as its reference implementation.
 """
 
 from __future__ import annotations
@@ -97,6 +105,10 @@ def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
 # nodes
 # ---------------------------------------------------------------------------
 
+# per-term rollup facts from belc.canon.extract_nodes (schemas.NODE_T)
+ROLLUP_FACTS = ("involved_genes", "involved_other", "gene_namespaces")
+
+
 def materialize_nodes(nodes_tbl: DataFrame,
                       modifiers_materialized: bool = False) -> DataFrame:
     """Dedup per-file node rows into the global node table.
@@ -111,6 +123,9 @@ def materialize_nodes(nodes_tbl: DataFrame,
     no such edges exist, so every node of a pure-eligible class is pure —
     including modified terms like p(HGNC:"IL2",pmod(Ph)).  Only with
     ``modifiers_materialized`` does ``has_modifiers`` gate purity.
+
+    The compiler's rollup facts (ROLLUP_FACTS) ride along, null for
+    leaves; `fill_leaf_facts` completes them.
     """
     deduped = (
         nodes_tbl.groupBy("node_class", "bel")
@@ -120,6 +135,7 @@ def materialize_nodes(nodes_tbl: DataFrame,
             F.first("props", ignorenulls=True).alias("props"),
             F.max("has_modifiers").alias("has_modifiers"),
             F.count(F.lit(1)).alias("n_occurrences"),
+            *[F.first(c, ignorenulls=True).alias(c) for c in ROLLUP_FACTS],
         )
     )
     pure_classes = F.array(*[F.lit(c) for c in sorted(PURE_CLASSES)])
@@ -132,7 +148,7 @@ def materialize_nodes(nodes_tbl: DataFrame,
         .withColumn("pure", is_pure)
         .select(
             "node_id", "node_class", "bel", "namespace", "name", "props",
-            "has_modifiers", "pure", "n_occurrences",
+            "has_modifiers", "pure", "n_occurrences", *ROLLUP_FACTS,
         )
     )
 
@@ -415,6 +431,62 @@ def involved_rollup(
         .withColumn("involved_genes", F.coalesce("involved_genes", F.array()))
         .withColumn("involved_other", F.coalesce("involved_other", F.array()))
     )
+
+
+def fill_leaf_facts(nodes: DataFrame) -> DataFrame:
+    """Complete whichever ROLLUP_FACTS columns `nodes` carries: the
+    compiler leaves them null on leaf terms (and p2g counterparts have
+    none), whose facts are their own name or namespace, by class."""
+    gene_like = F.col("node_class").isin(sorted(GENE_LIKE_CLASSES))
+
+    def own(cond, col):
+        return F.when(cond & F.col(col).isNotNull(), F.array(col)) \
+            .otherwise(F.array().cast("array<string>"))
+
+    own_facts = {
+        "involved_genes": own(gene_like, "name"),
+        "involved_other": own(~gene_like, "name"),
+        "gene_namespaces": own(gene_like, "namespace"),
+    }
+    return nodes.withColumns({c: F.coalesce(c, e)
+                              for c, e in own_facts.items()
+                              if c in nodes.columns})
+
+
+def rollup_facts(
+    nodes: DataFrame, facts: DataFrame, edges: DataFrame,
+    involved: bool = True, species: bool = True,
+) -> DataFrame:
+    """`nodes` plus involved_genes / involved_other (if `involved`) and
+    species (if `species`): the values of involved_rollup and
+    species_tagging, from the compiler's per-term facts instead of a
+    closure.  `facts` = (node_id, *ROLLUP_FACTS) of the terms with
+    subterms; `edges` = the bel_relation edges whose endpoints the
+    inferred species rule applies to (biodbs/bel.py:419-454)."""
+    df = fill_leaf_facts(nodes.join(facts, "node_id", "left"))
+    out = list(nodes.columns)
+    if involved:
+        out += ["involved_genes", "involved_other"]
+    if species:
+        incident = (
+            edges.select(F.col("subject_id").alias("node_id"))
+            .unionByName(edges.select(F.col("object_id").alias("node_id")))
+            .distinct().withColumn("incident", F.lit(True))
+        )
+        df = df.join(incident, "node_id", "left")
+        smap = species_map_expr()
+        species_ns = list(SPECIES_NAMESPACE)
+        gene_like = F.col("node_class").isin(sorted(GENE_LIKE_CLASSES))
+        lone_ns = F.element_at("gene_namespaces", 1)
+        direct = F.when(gene_like & F.col("namespace").isin(species_ns),
+                        F.element_at(smap, F.col("namespace")))
+        inferred = F.when(
+            F.col("incident") & (F.size("gene_namespaces") == 1),
+            F.when(lone_ns.isin(species_ns), F.element_at(smap, lone_ns)))
+        # the direct rule wins, as in species_tagging
+        df = df.withColumn("species", F.coalesce(direct, inferred))
+        out.append("species")
+    return df.select(*out)
 
 
 def species_map_expr():
@@ -1580,6 +1652,10 @@ def path_query(
     """
     if not (1 <= min_len <= max_len):
         raise ValueError("need 1 <= min_len <= max_len")
+    if nodes is not None:
+        # a materialize_nodes table carries the compiler's rollup facts
+        # with leaves null
+        nodes = fill_leaf_facts(nodes)
     epred = F.lit(True)
     if relations:
         epred = epred & F.col("relation").isin(list(relations))

@@ -245,17 +245,18 @@ def build_intact(uniprot: "pd.DataFrame") -> "pd.DataFrame":
 
 
 def dims_to_spark(spark, dims: Dimensions):
-    """Create the broadcast-side Spark DataFrames."""
+    """Create the broadcast-side Spark DataFrames (LocalTableScans, see
+    schemas.local_frame)."""
     from .schemas import (
         ANNOTATION_DICT_SCHEMA, CHEBI_SCHEMA, HGNC_SCHEMA,
-        NAMESPACE_DICT_SCHEMA, UNIPROT_SCHEMA,
+        NAMESPACE_DICT_SCHEMA, UNIPROT_SCHEMA, local_frame,
     )
     return {
-        "ns_dict": spark.createDataFrame(dims.namespace_entries,
-                                         NAMESPACE_DICT_SCHEMA),
-        "anno_dict": spark.createDataFrame(dims.annotation_entries,
-                                           ANNOTATION_DICT_SCHEMA),
-        "hgnc": spark.createDataFrame(dims.hgnc, HGNC_SCHEMA),
-        "uniprot": spark.createDataFrame(dims.uniprot, UNIPROT_SCHEMA),
-        "chebi": spark.createDataFrame(dims.chebi, CHEBI_SCHEMA),
+        "ns_dict": local_frame(spark, dims.namespace_entries,
+                               NAMESPACE_DICT_SCHEMA),
+        "anno_dict": local_frame(spark, dims.annotation_entries,
+                                 ANNOTATION_DICT_SCHEMA),
+        "hgnc": local_frame(spark, dims.hgnc, HGNC_SCHEMA),
+        "uniprot": local_frame(spark, dims.uniprot, UNIPROT_SCHEMA),
+        "chebi": local_frame(spark, dims.chebi, CHEBI_SCHEMA),
     }

@@ -91,7 +91,6 @@ def run_pipeline(
     parse_partitions: int | None = None,
     dedup_source: bool = True,
     run_id: str | None = None,
-    intermediate: str = "parquet",
     repair: bool = False,
     error_report: str | None = None,
     path_filter: bool = True,
@@ -208,38 +207,27 @@ def run_pipeline(
         metrics["n_statements"] = int(lin["n_statements"] or 0)
 
     # ---- 2. derived tables -------------------------------------------------
-    # Multi-consumer intermediates are persisted MEMORY_AND_DISK (spills per
-    # executor on a real cluster) rather than written to parquet: the parsed
-    # table is the durable resume checkpoint, and every downstream stage is
-    # deterministic from it, so intra-run intermediates only need lineage
-    # truncation, not durability.  `intermediate="parquet"` restores the
-    # old write-through behavior for debugging stage outputs.
-    _persisted: list[DataFrame] = []
-
-    if intermediate == "parquet":
-        def _ckpt(df: DataFrame, name: str) -> DataFrame:
-            p = os.path.join(out_dir, "_stage", name)
-            df.write.mode("overwrite").parquet(p)
-            return spark.read.parquet(p)
-    else:
-        from pyspark import StorageLevel
-
-        def _ckpt(df: DataFrame, name: str) -> DataFrame:
-            df = df.persist(StorageLevel.MEMORY_AND_DISK)
-            _persisted.append(df)
-            return df
+    # Multi-consumer intermediates are written through to parquet under
+    # <out>/_stage and read back: that cuts their plan lineage, so no
+    # downstream stage re-executes the parse/aggregate DAG.  Persisting
+    # them MEMORY_AND_DISK instead was slower end to end on the cold
+    # 200-file `build` benchmark (4-CPU host).
+    def _ckpt(df: DataFrame, name: str) -> DataFrame:
+        p = os.path.join(out_dir, "_stage", name)
+        df.write.mode("overwrite").parquet(p)
+        return spark.read.parquet(p)
 
     statements = P.statements_table(parsed)
     nodes_raw = P.nodes_table(parsed)
     child_edges_raw = P.child_edges_table(parsed)
-    # the entry/definition tables are tiny next to the wide parsed table;
-    # checkpointing them means the 4 validation families read a narrow
-    # table instead of re-exploding the nested parse output 4x
-    entries = _ckpt(P.entries_table(parsed), "entries")
-    defs = _ckpt(P.definitions_table(parsed), "defs")
 
     # ---- 3. validation -------------------------------------------------------
     with stage("validate"):
+        # the entry/definition tables are tiny next to the wide parsed
+        # table; checkpointing them means the 4 validation families read a
+        # narrow table instead of re-exploding the nested parse output 4x
+        entries = _ckpt(P.entries_table(parsed), "entries")
+        defs = _ckpt(P.definitions_table(parsed), "defs")
         ok_files = parsed.filter("ok").select("file_sha")
         sem_errors = V.semantic_errors(
             entries.join(ok_files, "file_sha", "left_semi"),
@@ -266,9 +254,9 @@ def run_pipeline(
         valid_files = parsed.filter("ok").select("file_sha")
 
     # ---- 5. graph materialization --------------------------------------------
-    # Each super-stage is checkpointed (persist or parquet, see _ckpt) so
-    # downstream stages never re-execute the parse/aggregate DAG — at 100 TB
-    # the alternative is a multi-x recompute of the most expensive stages.
+    # Each super-stage is checkpointed (see _ckpt) so downstream stages
+    # never re-execute the parse/aggregate DAG — at 100 TB the alternative
+    # is a multi-x recompute of the most expensive stages.
     with stage("materialize"):
         st_valid = statements.join(valid_files, "file_sha", "left_semi")
         with stage("materialize.nodes0"):
@@ -277,34 +265,19 @@ def run_pipeline(
                     nodes_raw.join(valid_files, "file_sha", "left_semi"),
                     modifiers_materialized=materialize_modifiers),
                 "nodes0")
+            # the compiler's rollup facts leave the node table here and
+            # rejoin in the rollup stage; leaves (null facts) stay behind
+            facts = nodes.filter(F.col("involved_genes").isNotNull()) \
+                .select("node_id", *G.ROLLUP_FACTS)
+            nodes = nodes.drop(*G.ROLLUP_FACTS)
         with stage("materialize.edges_stmt"):
-            edges_stmt = G.materialize_edges(st_valid, n_salts=n_salts)
+            edges_stmt = _ckpt(G.materialize_edges(st_valid, n_salts=n_salts),
+                               "edges_stmt")
             # p2g only probes which object_ids already have an incoming
-            # translated_to/transcribed_to edge — a KB-sized projection.
-            if intermediate == "parquet":
-                # the wide frame checkpoints once; the probe reads it back
-                edges_stmt = _ckpt(edges_stmt, "edges_stmt")
-                p2g_probe = edges_stmt.filter(F.col("relation").isin(
-                    ["translated_to", "transcribed_to"]))\
-                    .select("relation", "object_id")
-            else:
-                # caching the full wide frame costs a second
-                # materialization of the heaviest shuffle and OOMs
-                # small-heap configs.  The probe doesn't need the deduped
-                # edges at all: edge dedup never changes WHICH
-                # (relation, object_id) pairs exist, so probing the raw
-                # statements under the same edge filter is equivalent —
-                # and it turns a full two-phase aggregation pass of every
-                # statement into a pushed-filter scan of the two rare
-                # relations.  The wide edge DAG then executes exactly
-                # once, inside the union write below.
-                p2g_probe = _ckpt(
-                    st_valid.filter(
-                        F.col("edge_key").isNotNull() & ~F.col("nested")
-                        & F.col("relation").isin(
-                            ["translated_to", "transcribed_to"]))
-                    .select("relation", "object_id").distinct(),
-                    "p2g_probe")
+            # translated_to/transcribed_to edge — a KB-sized projection
+            p2g_probe = edges_stmt.filter(F.col("relation").isin(
+                ["translated_to", "transcribed_to"]))\
+                .select("relation", "object_id")
         with stage("materialize.struct_edges"):
             struct_edges = _ckpt(
                 G.materialize_structural_edges(
@@ -340,25 +313,17 @@ def run_pipeline(
         metrics["n_edges"] = int(eo["n_edges"])
 
     with stage("rollup"):
+        # involved_genes / involved_other / species from the facts belc
+        # computed per term (graph.rollup_facts), with the species rule's
+        # incident flag taken from the written bel_relation edges
         if involved or species:
-            closure = G.descendant_closure(
-                struct_edges, G.INVOLVED_GENES_EDGES).persist()
-            _persisted.append(closure)
-        nodes_base = nodes  # cached pre-rollup frame; both rollups derive
-        # from it so neither embeds the other's aggregation DAG
-        if involved:
-            inv = G.involved_rollup(nodes_base, struct_edges,
-                                    genes_closure=closure)
-            nodes = nodes.join(inv, "node_id", "left")
-        if species:
-            sp = G.species_tagging(
-                nodes_base, struct_edges,
+            nodes = G.rollup_facts(
+                nodes, facts,
                 edges_out.filter(F.col("relation_category") != "ebel"),
-                genes_closure=closure)
-            nodes = nodes.join(sp, "node_id", "left")
-        if involved or species:
-            # link_hgnc consumes its input twice (existing-names anti-join),
-            # so the rollup output must be materialized exactly once here
+                involved=involved, species=species)
+            # link_hgnc consumes its input twice (existing-names
+            # anti-join), so the rollup output must be materialized
+            # exactly once here
             nodes = _ckpt(nodes, "nodes2")
 
     with stage("link"):
@@ -382,9 +347,6 @@ def run_pipeline(
     metrics["n_valid_files"] = (
         int(lin["n_ok"] or 0) if mode != "strict" else valid_files.count())
     metrics["wall_s"] = round(time.time() - t_total, 3)
-
-    for _df in _persisted:
-        _df.unpersist()
 
     with open(os.path.join(out_dir, f"metrics_{run_id}.json"), "w") as fd:
         json.dump(metrics, fd, indent=2)

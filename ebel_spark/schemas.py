@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql.types import (
     ArrayType,
     BooleanType,
+    DoubleType,
     IntegerType,
     LongType,
     MapType,
@@ -67,9 +68,13 @@ STATEMENT_T = StructType([
     _f("edge_key", S),
 ])
 
+# involved_genes / involved_other / gene_namespaces: the term's rollup
+# facts (belc.canon.extract_nodes), null for leaves
 NODE_T = StructType([
     _f("node_class", S), _f("bel", S), _f("namespace", S), _f("name", S),
     _f("props", S), _f("has_modifiers", B),
+    _f("involved_genes", ArrayType(S)), _f("involved_other", ArrayType(S)),
+    _f("gene_namespaces", ArrayType(S)),
 ])
 
 CHILD_EDGE_T = StructType([
@@ -92,6 +97,24 @@ PARSED_SCHEMA = StructType([
     _f("n_syntax_errors", I, False),
     _f("ir_json", S),
 ])
+
+
+def local_frame(spark, columns, schema: StructType):
+    """A driver-built DataFrame sent to the JVM as one Arrow table
+    (`columns`: a pandas DataFrame, or a {name: values} dict, holding the
+    schema's fields), whatever the session's Arrow settings.  Its plan is
+    a LocalTableScan: no pickled Python RDD, so scanning, broadcasting or
+    writing it never starts a Python worker."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(columns[f.name], type=arrow_schema.field(f.name).type)
+         for f in schema.fields],
+        schema=arrow_schema)
+    return spark.createDataFrame(table)
+
 
 # dimension tables (broadcast side) ------------------------------------------
 
@@ -124,6 +147,10 @@ ERROR_REPORT_COLUMNS = (
     "file_sha", "error_class", "url", "keyword", "entry",
     "line_number", "column", "hint",
 )
+
+METRICS_SCHEMA = StructType([
+    _f("run_id", S), _f("metric", S), _f("value", DoubleType()),
+])
 
 LINEAGE_SCHEMA = StructType([
     _f("file_sha", S), _f("repo", S), _f("path", S),

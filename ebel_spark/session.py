@@ -15,6 +15,29 @@ import os
 from pyspark.sql import SparkSession
 
 
+def host_cpus() -> int:
+    """CPUs this process may run on (its affinity mask, not the host's
+    total), the default task-slot count."""
+    return len(os.sched_getaffinity(0))
+
+
+def default_driver_mem_gb(cores: int) -> int:
+    """Heap for a local session with `cores` task slots: 1.5 GB a slot,
+    at least 12 GB, capped so that it fits in MemAvailable twice over
+    after 2 GB for the Python workers.  The heap is committed up front
+    (-Xms = -Xmx), so an uncapped default gets the JVM OOM-killed on a
+    small host as soon as a second Spark app (a local-cluster test, a
+    benchmark side run) starts next to it."""
+    want = max(12, int(cores * 1.5))
+    try:
+        with open("/proc/meminfo") as fd:
+            avail_kb = next(int(line.split()[1]) for line in fd
+                            if line.startswith("MemAvailable:"))
+    except (OSError, StopIteration, ValueError):
+        return want
+    return max(1, min(want, int((avail_kb / 2**20 - 2) / 2)))
+
+
 def get_spark(
     cores: int | None = None,
     app_name: str = "ebel-spark",
@@ -29,7 +52,7 @@ def get_spark(
     `cores` then means cores-per-executor x executors for sizing
     shuffle partitions."""
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS", host_cpus()))
     if shuffle_partitions is None:
         shuffle_partitions = max(cores * 2, 16)
     # local mode runs driver + all task threads in ONE JVM: the heap must
@@ -38,8 +61,9 @@ def get_spark(
     # heap showed up as 60-98% *system* CPU (kernel page zeroing) in
     # vmstat, randomly multiplying stage times 3-20x.
     # memory scales with the slot count (a 4N-executor cluster has 4x the
-    # memory of an N-executor one, so the local proxy must too)
-    default_mem = f"{max(12, int(cores * 1.5))}g"
+    # memory of an N-executor one, so the local proxy must too), within
+    # what the host has free (default_driver_mem_gb)
+    default_mem = f"{default_driver_mem_gb(cores)}g"
     b = SparkSession.builder
     # under spark-submit the master comes from the launch command
     # (--master yarn / spark://...) and must not be overridden.  SparkConf()

@@ -187,7 +187,8 @@ def write_metrics_table(
              if isinstance(v, (int, float))]
     if not rows:
         return
-    mdf = spark.createDataFrame(rows, "run_id string, metric string, "
-                                      "value double")
+    from .schemas import METRICS_SCHEMA, local_frame
+    mdf = local_frame(spark, dict(zip(METRICS_SCHEMA.fieldNames(),
+                                      zip(*rows))), METRICS_SCHEMA)
     mdf.coalesce(1).write.mode("append").parquet(
         os.path.join(out_dir, "metrics"))

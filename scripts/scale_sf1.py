@@ -7,7 +7,7 @@ claiming the plan survives 100x.
 
 Writes BENCH_SCALE_SF1.json at the repo root.
 
-Usage: python scripts/scale_sf1.py [--cpus 32] [--small 10000]
+Usage: python scripts/scale_sf1.py [--cpus N] [--small 10000]
        [--big 100000] [--stmts 100]
 """
 
@@ -26,8 +26,10 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)),
 
 
 def main() -> None:
+    from ebel_spark.session import host_cpus
+
     ap = argparse.ArgumentParser()
-    ap.add_argument("--cpus", type=int, default=32)
+    ap.add_argument("--cpus", type=int, default=host_cpus())
     ap.add_argument("--small", type=int, default=10000)
     ap.add_argument("--big", type=int, default=100000)
     ap.add_argument("--stmts", type=int, default=100)

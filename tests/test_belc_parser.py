@@ -171,3 +171,43 @@ class TestProcessFile:
         classes = sorted(n["node_class"] for n in out["nodes"])
         assert classes == ["pmod", "protein", "protein"]
         assert [e["relation"] for e in out["child_edges"]] == ["has__pmod"]
+
+    def test_rollup_facts_on_nested_terms(self):
+        bel = (
+            'SET DOCUMENT Name = "t"\n'
+            'SET Citation = {"PubMed", "T", "1"}\n'
+            'SET Evidence = "e"\n'
+            'composite(p(HGNC:IL6), complex(p(HGNC:A), g(MGI:B), '
+            'a(CHEBI:atp))) increases '
+            'rxn(reactants(a(CHEBI:glc), p(RGD:R1)), products(a(CHEBI:pyr)))\n'
+            'act(p(HGNC:AKT1, pmod(Ph)), ma(kin)) decreases '
+            'bp(GOBP:"cell death")\n'
+        )
+        out = process_file(bel)
+        assert out["ok"], out["syntax_errors"]
+        facts = {n["bel"]: (n["involved_genes"], n["involved_other"],
+                            n["gene_namespaces"]) for n in out["nodes"]}
+        cplx = 'complex(a(CHEBI:"atp"),g(MGI:"B"),p(HGNC:"A"))'
+        assert facts[cplx] == (["A", "B"], ["atp"], ["HGNC", "MGI"])
+        # the complex's names roll up through has__complex; IL6 through
+        # has__protein, which the involved_other walk does not follow
+        assert facts[f'composite(p(HGNC:"IL6"),{cplx})'] == (
+            ["A", "B", "IL6"], ["atp"], ["HGNC", "MGI"])
+        assert facts['reactants(a(CHEBI:"glc"),p(RGD:"R1"))'] == (
+            ["R1"], ["glc"], ["RGD"])
+        assert facts['products(a(CHEBI:"pyr"))'] == ([], ["pyr"], [])
+        assert facts['rxn(reactants(a(CHEBI:"glc"),p(RGD:"R1")),'
+                     'products(a(CHEBI:"pyr")))'] == (
+            ["R1"], ["glc", "pyr"], ["RGD"])
+        # act's subterm edge is has__protein: genes only
+        assert facts['act(p(HGNC:"AKT1",pmod(Ph)),ma(kin))'] == (
+            ["AKT1"], [], ["HGNC"])
+        # leaves (modifiers are not subterms unless materialized) carry
+        # null facts
+        for leaf in ('p(HGNC:"IL6")', 'g(MGI:"B")', 'a(CHEBI:"atp")',
+                     'p(HGNC:"AKT1",pmod(Ph))', 'bp(GOBP:"cell death")'):
+            assert facts[leaf] == (None, None, None), leaf
+        mods = process_file(bel, materialize_modifiers=True)
+        mfacts = {n["bel"]: n["involved_genes"] for n in mods["nodes"]}
+        assert mfacts['p(HGNC:"AKT1",pmod(Ph))'] == ["AKT1"]
+        assert mfacts['pmod(Ph)'] is None

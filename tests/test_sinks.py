@@ -52,6 +52,46 @@ class TestMetricsTable:
         assert "stage.validate" in by_run["r1"]
 
 
+class TestLocalFrames:
+    """Driver-built frames go to the JVM through Arrow: their plan is a
+    LocalTableScan, not a scan of a pickled Python RDD (which starts
+    Python workers).  createDataFrame falls back from Arrow silently, so
+    the plan is asserted with Arrow switched off for pandas input."""
+
+    def _plan(self, df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    def test_dims_and_metrics_are_local_table_scans(self, spark):
+        from ebel_spark.namespaces import build_dimensions, dims_to_spark
+        from ebel_spark.schemas import (HGNC_SCHEMA, METRICS_SCHEMA,
+                                        local_frame)
+
+        key = "spark.sql.execution.arrow.pyspark.enabled"
+        old = spark.conf.get(key)
+        try:
+            spark.conf.set(key, "false")
+            dims = build_dimensions(n_hgnc=200, n_chebi=50, n_go=50)
+            dfs = dims_to_spark(spark, dims)
+            assert sorted(dfs) == ["anno_dict", "chebi", "hgnc", "ns_dict",
+                                   "uniprot"]
+            for name, df in dfs.items():
+                assert self._plan(df).startswith("LocalTableScan"), name
+            assert dfs["hgnc"].schema == HGNC_SCHEMA
+            assert dfs["hgnc"].count() == len(dims.hgnc)
+            first = dims.hgnc.iloc[0]
+            row = dfs["hgnc"].first()
+            assert (row.symbol, row.prev_symbols, row.entrez_id) == (
+                first.symbol, list(first.prev_symbols), first.entrez_id)
+            metrics = local_frame(
+                spark, {"run_id": ["r", "r"], "metric": ["a", "b"],
+                        "value": [1.0, 2.5]}, METRICS_SCHEMA)
+            assert self._plan(metrics).startswith("LocalTableScan")
+            assert [tuple(r) for r in metrics.collect()] == [
+                ("r", "a", 1.0), ("r", "b", 2.5)]
+        finally:
+            spark.conf.set(key, old)
+
+
 class TestClusteredWrite:
     def test_files_cover_disjoint_ranges_and_prune(self, spark, tmp_path):
         import glob
