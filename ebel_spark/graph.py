@@ -627,18 +627,11 @@ def pagerank(
     hash-partitioned on the node key; the per-iteration join then
     co-locates and only the contribution aggregation shuffles.
     """
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    nodes = (
-        e.select(F.col("u").alias("bel"))
-        .union(e.select(F.col("v").alias("bel")))
-        .distinct()
-        .transform(cut_lineage)
-    )
+    e, nodes, outdeg = _rank_inputs(edges, src, dst)
     n = nodes.count()
     if n == 0:
         # an empty edge frame has no nodes; 1.0/n below would raise
         return nodes.select("bel", F.lit(0.0).alias("rank"))
-    outdeg = e.groupBy("u").agg(F.count(F.lit(1)).alias("odeg"))
     # rank rows carry odeg so the dangling reduce and the contribution
     # join both run off one cached frame per iteration
     ranks = (
@@ -647,13 +640,45 @@ def pagerank(
         .transform(cut_lineage)
     )
     base = (1.0 - damping) / n
+    # same IEEE op order as the scalar form: double sum, divided by n,
+    # added to the contribution, scaled by damping
+    return _rank_rounds(
+        e, ranks, iters,
+        F.lit(base) + F.lit(damping)
+        * (F.coalesce(F.col("contrib"), F.lit(0.0))
+           + F.col("dang_mass") / F.lit(float(n))))
+
+
+def _node_set(e: DataFrame, a: str = "u", b: str = "v") -> DataFrame:
+    """The distinct endpoints (`bel`) of edge columns `a` and `b`."""
+    return (
+        e.select(F.col(a).alias("bel"))
+        .union(e.select(F.col(b).alias("bel")))
+        .distinct()
+    )
+
+
+def _rank_inputs(edges: DataFrame, src: str, dst: str):
+    """(e, nodes, outdeg) for the PageRank variants: the (u, v) edge
+    frame, its lineage-cut node set and its out-degrees (u, odeg)."""
+    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    nodes = _node_set(e).transform(cut_lineage)
+    return e, nodes, e.groupBy("u").agg(F.count(F.lit(1)).alias("odeg"))
+
+
+def _rank_rounds(e: DataFrame, ranks: DataFrame, iters: int,
+                 rank) -> DataFrame:
+    """`iters` PageRank rounds over `ranks` (bel, odeg, ..., rank), each
+    setting rank to the expression `rank` over the round's `contrib`
+    (in-neighbour rank/odeg sum) and `dang_mass` (rank sum of the nodes
+    without out-edges) and the frame's other columns.  Returns (bel, rank).
+    """
+    keep = [c for c in ranks.columns if c != "rank"]
     for it in range(iters):
         # dangling mass rides as a broadcast 1-row aggregate INSIDE the
         # iteration's plan (crossJoin of a scalar frame) instead of a
         # driver-side .first() — one action per iteration (the eager
-        # lineage cut), not two.  Same IEEE op order as the scalar form:
-        # double sum, divided by n, added to the contribution, scaled by
-        # damping.
+        # lineage cut), not two.
         dang = (
             ranks.filter(F.col("odeg").isNull())
             .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dang_mass"))
@@ -668,12 +693,7 @@ def pagerank(
             ranks.drop("rank")
             .join(contrib, ranks["bel"] == contrib["v"], "left")
             .crossJoin(F.broadcast(dang))
-            .select(
-                "bel", "odeg",
-                (F.lit(base) + F.lit(damping)
-                 * (F.coalesce(F.col("contrib"), F.lit(0.0))
-                    + F.col("dang_mass") / F.lit(float(n)))).alias("rank"),
-            )
+            .select(*keep, rank.alias("rank"))
         )
         # materialize every second round (and the last): two join+agg
         # rounds per action keeps the plan shallow while halving the
@@ -710,19 +730,12 @@ def personalized_pagerank(
     the uniform op carries over; the seed vector rides as one extra
     column on the rank frame, not a per-iteration join.
     """
-    e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    nodes = (
-        e.select(F.col("u").alias("bel"))
-        .union(e.select(F.col("v").alias("bel")))
-        .distinct()
-        .transform(cut_lineage)
-    )
+    e, nodes, outdeg = _rank_inputs(edges, src, dst)
     seed_nodes = nodes.join(
         seeds.select(F.col("bel").alias("__sb")).distinct(),
         nodes["bel"] == F.col("__sb")).select("bel")
     s = seed_nodes.count()
     p = (1.0 / s) if s else 0.0
-    outdeg = e.groupBy("u").agg(F.count(F.lit(1)).alias("odeg"))
     ranks = (
         nodes.join(seed_nodes.withColumn("__seed", F.lit(1)), "bel", "left")
         .join(outdeg, nodes["bel"] == outdeg["u"], "left")
@@ -733,31 +746,11 @@ def personalized_pagerank(
         .withColumn("rank", F.col("p"))
         .transform(cut_lineage)
     )
-    for it in range(iters):
-        dang = (
-            ranks.filter(F.col("odeg").isNull())
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dang_mass"))
-        )
-        contrib = (
-            e.join(ranks.filter(F.col("odeg").isNotNull()),
-                   e["u"] == ranks["bel"])
-            .groupBy("v")
-            .agg(F.sum(F.col("rank") / F.col("odeg")).alias("contrib"))
-        )
-        ranks = (
-            ranks.drop("rank")
-            .join(contrib, ranks["bel"] == contrib["v"], "left")
-            .crossJoin(F.broadcast(dang))
-            .select(
-                "bel", "odeg", "p",
-                (F.lit(1.0 - damping) * F.col("p") + F.lit(damping)
-                 * (F.coalesce(F.col("contrib"), F.lit(0.0))
-                    + F.col("dang_mass") * F.col("p"))).alias("rank"),
-            )
-        )
-        if it % 2 == 1 or it == iters - 1:
-            ranks = cut_lineage(ranks)
-    return ranks.select("bel", "rank")
+    return _rank_rounds(
+        e, ranks, iters,
+        F.lit(1.0 - damping) * F.col("p") + F.lit(damping)
+        * (F.coalesce(F.col("contrib"), F.lit(0.0))
+           + F.col("dang_mass") * F.col("p")))
 
 
 def hits(
@@ -780,12 +773,7 @@ def hits(
     (bel, hub, auth) for every node.
     """
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    nodes = (
-        e.select(F.col("u").alias("bel"))
-        .union(e.select(F.col("v").alias("bel")))
-        .distinct()
-        .transform(cut_lineage)
-    )
+    nodes = _node_set(e).transform(cut_lineage)
     if nodes.isEmpty():
         return nodes.select("bel", F.lit(0.0).alias("hub"),
                             F.lit(0.0).alias("auth"))
@@ -832,6 +820,24 @@ def undirected_edges(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFr
     )
 
 
+def _undirected_degree(und: DataFrame, node: str = "n",
+                       deg: str = "d") -> DataFrame:
+    """(node, deg): the degree of every endpoint of an undirected (a, b)
+    frame."""
+    return (
+        und.select(F.col("a").alias(node))
+        .unionAll(und.select(F.col("b").alias(node)))
+        .groupBy(node)
+        .agg(F.count(F.lit(1)).alias(deg))
+    )
+
+
+def _adjacency(und: DataFrame) -> DataFrame:
+    """(n, h): both directions of every undirected (a, b) edge."""
+    return und.select(F.col("a").alias("n"), F.col("b").alias("h")).unionAll(
+        und.select(F.col("b").alias("n"), F.col("a").alias("h")))
+
+
 def triangle_counts(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFrame:
     """Per-node triangle counts via degree-ordered edge orientation
     (the compact-forward / node-iterator++ scheme).
@@ -848,38 +854,16 @@ def triangle_counts(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFra
 
     Returns (bel, n_triangles) for nodes in >= 1 triangle.
     """
-    und = undirected_edges(edges, src, dst).transform(cut_lineage)
-    deg = (
-        und.select(F.col("a").alias("n"))
-        .unionAll(und.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    keyed = (
-        und.join(deg.select(F.col("n").alias("a"), F.col("d").alias("da")), "a")
-        .join(deg.select(F.col("n").alias("b"), F.col("d").alias("db")), "b")
-        .select(
-            "a", "b",
-            F.struct(F.col("da").alias("d"), F.col("a").alias("n")).alias("ka"),
-            F.struct(F.col("db").alias("d"), F.col("b").alias("n")).alias("kb"),
-        )
-    )
-    oriented = keyed.select(
-        F.when(F.col("ka") < F.col("kb"), F.col("a")).otherwise(F.col("b")).alias("s"),
-        F.when(F.col("ka") < F.col("kb"), F.col("b")).otherwise(F.col("a")).alias("t"),
-        F.when(F.col("ka") < F.col("kb"), F.col("kb")).otherwise(F.col("ka")).alias("kt"),
-    ).transform(cut_lineage)
-    o1 = oriented.select(F.col("s"), F.col("t").alias("v"), F.col("kt").alias("kv"))
-    o2 = oriented.select(F.col("s"), F.col("t").alias("w"), F.col("kt").alias("kw"))
-    wedges = (
-        o1.join(o2, "s")
-        .filter(F.col("kv") < F.col("kw"))
-        .select("s", "v", "w")
-    )
-    closing = oriented.select(F.col("s").alias("v"), F.col("t").alias("w"))
-    tris = wedges.join(closing, ["v", "w"], "left_semi")
+    return _node_triangles(
+        undirected_edges(edges, src, dst).transform(cut_lineage))
+
+
+def _node_triangles(und: DataFrame) -> DataFrame:
+    """triangle_counts over a lineage-cut canonical undirected (a, b)
+    frame."""
     return (
-        tris.select(F.explode(F.array("s", "v", "w")).alias("bel"))
+        _triangles(_orient_by_degree(und))
+        .select(F.explode(F.array("s", "v", "w")).alias("bel"))
         .groupBy("bel")
         .agg(F.count(F.lit(1)).alias("n_triangles"))
     )
@@ -897,15 +881,14 @@ def edge_support(edges: DataFrame, src: str = "u", dst: str = "v") -> DataFrame:
 
     Returns (a, b, support) with a < b for edges in >= 1 triangle.
     """
-    und = undirected_edges(edges, src, dst).transform(cut_lineage)
-    return _edge_support_und(und)
+    return _support_of_oriented(_orient_by_degree(
+        undirected_edges(edges, src, dst).transform(cut_lineage)))
 
 
-def _support_of_oriented(oriented: DataFrame) -> DataFrame:
-    """Per-undirected-edge triangle support from an already-ORIENTED frame
-    with columns (s, t, kt) — compact-forward wedge join + semi-join close,
-    each triangle crediting its three edges.  Shared by _edge_support_und
-    and every ktruss_peel round.  Returns (a, b, support), a < b."""
+def _triangles(oriented: DataFrame) -> DataFrame:
+    """Every triangle of an ORIENTED (s, t, kt) frame exactly once, as
+    (s, v, w) with key order s < v < w: compact-forward wedge join of
+    the two out-edges of s, closed by a semi-join on the edge v -> w."""
     o1 = oriented.select(F.col("s"), F.col("t").alias("v"), F.col("kt").alias("kv"))
     o2 = oriented.select(F.col("s"), F.col("t").alias("w"), F.col("kt").alias("kw"))
     wedges = (
@@ -914,11 +897,18 @@ def _support_of_oriented(oriented: DataFrame) -> DataFrame:
         .select("s", "v", "w")
     )
     closing = oriented.select(F.col("s").alias("v"), F.col("t").alias("w"))
-    tris = wedges.join(closing, ["v", "w"], "left_semi")
+    return wedges.join(closing, ["v", "w"], "left_semi")
+
+
+def _support_of_oriented(oriented: DataFrame) -> DataFrame:
+    """Per-undirected-edge triangle support from an already-ORIENTED frame
+    with columns (s, t, kt), each triangle crediting its three edges.
+    Shared by edge_support and every ktruss_peel round.  Returns
+    (a, b, support), a < b."""
     pair = (lambda x, y: F.struct(F.least(x, y).alias("a"),
                                   F.greatest(x, y).alias("b")))
     return (
-        tris.select(F.explode(F.array(
+        _triangles(oriented).select(F.explode(F.array(
             pair(F.col("s"), F.col("v")),
             pair(F.col("s"), F.col("w")),
             pair(F.col("v"), F.col("w")))).alias("e"))
@@ -933,12 +923,7 @@ def _orient_by_degree(und: DataFrame, keep_ab: bool = False) -> DataFrame:
     points from its lower- to its higher-(d, n) endpoint, giving (s, t, kt)
     for compact-forward triangle enumeration.  With keep_ab the original
     (a, b) columns ride along (ktruss_peel needs them for the semi-join)."""
-    deg = (
-        und.select(F.col("a").alias("n"))
-        .unionAll(und.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
+    deg = _undirected_degree(und)
     keyed = (
         und.join(deg.select(F.col("n").alias("a"), F.col("d").alias("da")), "a")
         .join(deg.select(F.col("n").alias("b"), F.col("d").alias("db")), "b")
@@ -955,13 +940,6 @@ def _orient_by_degree(und: DataFrame, keep_ab: bool = False) -> DataFrame:
         F.when(F.col("ka") < F.col("kb"), F.col("b")).otherwise(F.col("a")).alias("t"),
         F.when(F.col("ka") < F.col("kb"), F.col("kb")).otherwise(F.col("ka")).alias("kt"),
     ).transform(cut_lineage)
-
-
-def _edge_support_und(und: DataFrame) -> DataFrame:
-    """edge_support core over an already-canonical undirected (a, b) frame
-    (distinct, a < b, no self-loops): orient by degree, then the shared
-    _support_of_oriented credit pass."""
-    return _support_of_oriented(_orient_by_degree(und))
 
 
 def ktruss_peel(
@@ -981,8 +959,11 @@ def ktruss_peel(
     (one driver-side count() over the already-checkpointed frame, so it
     schedules no recompute) and peeling stops when no edge dropped,
     bounded by `max_rounds`.  The output then carries a constant
-    `converged` column — false only if max_rounds was hit first, the
-    convergence signal a fixed unrolling cannot give.  The fixed-`rounds`
+    `converged` column, the convergence signal a fixed unrolling cannot
+    give: true iff stability was observed within `max_rounds` counts,
+    i.e. some round dropped no edge.  A peel whose last edge drop falls
+    on round `max_rounds` itself reports false, because the count that
+    would confirm it takes one more round.  The fixed-`rounds`
     mode is kept as the oracle-twin protocol (DuckDB unrolls the same
     round count).
     The edge-centric sibling of kcore_peel: where k-core trims low-degree
@@ -1011,27 +992,20 @@ def ktruss_peel(
     converged = True  # k <= 2: the whole graph IS the k-truss, trivially
 
     if k > 2:
-        if fixpoint:
-            converged = False
-            prev = o.count()
-            for _ in range(max_rounds):
-                sup = _support_of_oriented(o)
-                o = o.join(
-                    sup.filter(F.col("support") >= k - 2).select("a", "b"),
-                    ["a", "b"], "left_semi",
-                ).transform(cut_lineage)
+        converged = False
+        prev = o.count() if fixpoint else None
+        for _ in range(max_rounds if fixpoint else rounds):
+            sup = _support_of_oriented(o)
+            o = o.join(
+                sup.filter(F.col("support") >= k - 2).select("a", "b"),
+                ["a", "b"], "left_semi",
+            ).transform(cut_lineage)
+            if fixpoint:
                 n = o.count()
-                if n == prev:
-                    converged = True
+                converged = n == prev
+                if converged:
                     break
                 prev = n
-        else:
-            for _ in range(rounds):
-                sup = _support_of_oriented(o)
-                o = o.join(
-                    sup.filter(F.col("support") >= k - 2).select("a", "b"),
-                    ["a", "b"], "left_semi",
-                ).transform(cut_lineage)
     final = _support_of_oriented(o)
     out = (
         o.select("a", "b").join(final, ["a", "b"], "left")
@@ -1099,10 +1073,8 @@ def random_walks(
     Returns (start, walk, step, node) rows, step 0 = the start node.
     """
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).distinct()
-    nodes = (e.select(F.col("u").alias("bel"))
-             .union(e.select("v")).distinct())
     walk_ids = F.array(*[F.lit(w) for w in range(walks_per_node)])
-    cur = nodes.select(
+    cur = _node_set(e).select(
         F.col("bel").alias("start"),
         F.explode(walk_ids).alias("walk"),
         F.col("bel").alias("node"),
@@ -1112,11 +1084,26 @@ def random_walks(
     # window shuffle, persisted — each step's 1:1 state join filters this
     # frame instead of re-deriving (and re-shuffling) the edge list
     steps = F.array(*[F.lit(t) for t in range(walk_len)])
+    from .ops.dedup import _pin  # lazy: dedup imports graph.cut_lineage
+    trans = _pin(_walk_transitions(e, walk_ids, steps))
+    for t in range(walk_len):
+        cur = (
+            cur.join(trans.filter(F.col("t") == t), ["node", "walk"])
+            .select("start", "walk", F.col("nxt").alias("node"))
+        )
+        out = out.unionByName(cur.withColumn("step", F.lit(t + 1)))
+    return out
+
+
+def _walk_transitions(e: DataFrame, walk_ids, steps) -> DataFrame:
+    """(node, walk, t, nxt) for every walk id in `walk_ids` and step in
+    `steps`: the DeepWalk hop out of node u at step t of walk w is the
+    out-neighbour v of the (u, v) frame `e` minimizing
+    (xxhash64("u|w|t|v"), v)."""
     h = F.xxhash64(F.concat_ws(
         "|", F.col("u"), F.col("walk").cast("string"),
         F.col("t").cast("string"), F.col("v")))
-    from .ops.dedup import _pin  # lazy: dedup imports graph.cut_lineage
-    trans = _pin(
+    return (
         e.select("u", "v", F.explode(walk_ids).alias("walk"))
         .select("u", "v", "walk", F.explode(steps).alias("t"))
         .withColumn("rn", F.row_number().over(
@@ -1126,13 +1113,6 @@ def random_walks(
         .select(F.col("u").alias("node"), "walk", "t",
                 F.col("v").alias("nxt"))
     )
-    for t in range(walk_len):
-        cur = (
-            cur.join(trans.filter(F.col("t") == t), ["node", "walk"])
-            .select("start", "walk", F.col("nxt").alias("node"))
-        )
-        out = out.unionByName(cur.withColumn("step", F.lit(t + 1)))
-    return out
 
 
 def skipgram_pairs(walks: DataFrame, window: int = 2) -> DataFrame:
@@ -1264,12 +1244,7 @@ def kcore_peel(
     """
     e = undirected_edges(edges, src, dst).transform(cut_lineage)
     for it in range(rounds):
-        deg = (
-            e.select(F.col("a").alias("n"))
-            .unionAll(e.select(F.col("b").alias("n")))
-            .groupBy("n")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
+        deg = _undirected_degree(e)
         keep = deg.filter(F.col("d") >= k).select("n")
         e = (
             e.join(keep.select(F.col("n").alias("a")), "a", "left_semi")
@@ -1280,12 +1255,7 @@ def kcore_peel(
         # materialization, identical fixpoint values
         if it % 2 == 1 or it == rounds - 1:
             e = cut_lineage(e)
-    return (
-        e.select(F.col("a").alias("bel"))
-        .unionAll(e.select(F.col("b").alias("bel")))
-        .groupBy("bel")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-    )
+    return _undirected_degree(e, "bel", "deg")
 
 
 def label_propagation(
@@ -1309,10 +1279,7 @@ def label_propagation(
 
     Returns (bel, label) after `iters` rounds.
     """
-    und = undirected_edges(edges, src, dst)
-    adj = und.select(F.col("a").alias("n"), F.col("b").alias("h")).unionAll(
-        und.select(F.col("b").alias("n"), F.col("a").alias("h"))
-    ).transform(cut_lineage)
+    adj = _adjacency(undirected_edges(edges, src, dst)).transform(cut_lineage)
     labels = adj.select(F.col("n").alias("bel")).distinct().select(
         "bel", F.col("bel").alias("label"))
     w = Window.partitionBy("n").orderBy(F.desc("c"), F.asc("label"))
@@ -1376,9 +1343,7 @@ def adamic_adar(
     contrib = aa_contrib_table(max_hub)
     cmap = F.create_map(
         *[F.lit(x) for kv in contrib.items() for x in kv])
-    und = undirected_edges(edges, src, dst).transform(cut_lineage)
-    adj = und.select(F.col("a").alias("n"), F.col("b").alias("h")).unionAll(
-        und.select(F.col("b").alias("n"), F.col("a").alias("h")))
+    adj = _adjacency(undirected_edges(edges, src, dst).transform(cut_lineage))
     hub = adj.groupBy("h").agg(F.count(F.lit(1)).alias("hd"))
     ok = hub.filter((F.col("hd") >= 2) & (F.col("hd") <= max_hub))
     capped = (
@@ -1425,9 +1390,7 @@ def neighbor_jaccard(
     Returns (x, y, inter, jaccard) with x < y and jaccard >= threshold,
     jaccard rounded to 6 dp.
     """
-    und = undirected_edges(edges, src, dst).transform(cut_lineage)
-    adj = und.select(F.col("a").alias("n"), F.col("b").alias("h")).unionAll(
-        und.select(F.col("b").alias("n"), F.col("a").alias("h")))
+    adj = _adjacency(undirected_edges(edges, src, dst).transform(cut_lineage))
     hub_ok = (
         adj.groupBy("h").agg(F.count(F.lit(1)).alias("hd"))
         .filter(F.col("hd") <= max_hub)
@@ -1486,13 +1449,8 @@ def negative_samples(
     pos = edges.select(
         F.col(edge_id).alias("edge_id"), F.col(subj).alias("subject_bel"),
         F.col(rel).alias("relation"), F.col(obj).alias("object_bel"))
-    ents = (
-        pos.select(F.col("subject_bel").alias("bel"))
-        .unionAll(pos.select(F.col("object_bel").alias("bel")))
-        .distinct()
-        .withColumn("bucket", F.pmod(_md5_int(F.col("bel")),
-                                     F.lit(buckets)))
-    )
+    ents = _node_set(pos, "subject_bel", "object_bel").withColumn(
+        "bucket", F.pmod(_md5_int(F.col("bel")), F.lit(buckets)))
     probes = pos.select(
         "*", F.explode(F.array(*[F.lit(i) for i in range(k)]))
         .alias("neg_idx")
@@ -1837,6 +1795,44 @@ def match_context(
     return nf.join(touched, "bel", "left_semi")
 
 
+def _horn_body(statements: DataFrame, subj: str, rel: str, obj: str,
+               max_mid_degree: int | None):
+    """(body, heads) of the length-2 Horn rules over the deduplicated
+    facts: body = distinct (r1, r2, x, z) groundings of
+    r1(x, y) ∧ r2(y, z) with x != z, dropping join variables y whose
+    in*out fanout exceeds `max_mid_degree`; heads = (r3, x, z), every fact
+    as a candidate head."""
+    facts = (
+        statements.select(F.col(subj).alias("u"), F.col(rel).alias("r"),
+                          F.col(obj).alias("v"))
+        .distinct()
+        .transform(cut_lineage)
+    )
+    left = facts.select(F.col("r").alias("r1"), F.col("u").alias("x"),
+                        F.col("v").alias("y"))
+    right = facts.select(F.col("r").alias("r2"), F.col("u").alias("y"),
+                         F.col("v").alias("z"))
+    if max_mid_degree is not None:
+        n_in = left.groupBy("y").agg(F.count(F.lit(1)).alias("n_in"))
+        n_out = right.groupBy("y").agg(F.count(F.lit(1)).alias("n_out"))
+        ok = (
+            n_in.join(n_out, "y")
+            .filter(F.col("n_in") * F.col("n_out") <= max_mid_degree)
+            .select("y")
+        )
+        left = left.join(ok, "y", "left_semi")
+        right = right.join(ok, "y", "left_semi")
+    body = (
+        left.join(right, "y")
+        .filter(F.col("x") != F.col("z"))
+        .select("r1", "r2", "x", "z")
+        .distinct()
+    )
+    heads = facts.select(F.col("r").alias("r3"), F.col("u").alias("x"),
+                         F.col("v").alias("z"))
+    return body, heads
+
+
 def mine_horn_rules(
     statements: DataFrame,
     subj: str = "u",
@@ -1879,36 +1875,9 @@ def mine_horn_rules(
 
     Returns (r1, r2, r3, support, body_size, conf).
     """
-    facts = (
-        statements.select(F.col(subj).alias("u"), F.col(rel).alias("r"),
-                          F.col(obj).alias("v"))
-        .distinct()
-        .transform(cut_lineage)
-    )
-    left = facts.select(F.col("r").alias("r1"), F.col("u").alias("x"),
-                        F.col("v").alias("y"))
-    right = facts.select(F.col("r").alias("r2"), F.col("u").alias("y"),
-                         F.col("v").alias("z"))
-    if max_mid_degree is not None:
-        n_in = left.groupBy("y").agg(F.count(F.lit(1)).alias("n_in"))
-        n_out = right.groupBy("y").agg(F.count(F.lit(1)).alias("n_out"))
-        ok = (
-            n_in.join(n_out, "y")
-            .filter(F.col("n_in") * F.col("n_out") <= max_mid_degree)
-            .select("y")
-        )
-        left = left.join(ok, "y", "left_semi")
-        right = right.join(ok, "y", "left_semi")
-    body = (
-        left.join(right, "y")
-        .filter(F.col("x") != F.col("z"))
-        .select("r1", "r2", "x", "z")
-        .distinct()
-    )
+    body, heads = _horn_body(statements, subj, rel, obj, max_mid_degree)
     body_size = body.groupBy("r1", "r2").agg(
         F.count(F.lit(1)).alias("body_size"))
-    heads = facts.select(F.col("r").alias("r3"), F.col("u").alias("x"),
-                         F.col("v").alias("z"))
     support = (
         body.join(heads, ["x", "z"])
         .groupBy("r1", "r2", "r3")
@@ -1968,37 +1937,10 @@ def apply_horn_rules(
 
     Returns (x, r3, z, conf, via_r1, via_r2).
     """
-    facts = (
-        statements.select(F.col(subj).alias("u"), F.col(rel).alias("r"),
-                          F.col(obj).alias("v"))
-        .distinct()
-        .transform(cut_lineage)
-    )
-    left = facts.select(F.col("r").alias("r1"), F.col("u").alias("x"),
-                        F.col("v").alias("y"))
-    right = facts.select(F.col("r").alias("r2"), F.col("u").alias("y"),
-                         F.col("v").alias("z"))
-    if max_mid_degree is not None:
-        n_in = left.groupBy("y").agg(F.count(F.lit(1)).alias("n_in"))
-        n_out = right.groupBy("y").agg(F.count(F.lit(1)).alias("n_out"))
-        ok = (
-            n_in.join(n_out, "y")
-            .filter(F.col("n_in") * F.col("n_out") <= max_mid_degree)
-            .select("y")
-        )
-        left = left.join(ok, "y", "left_semi")
-        right = right.join(ok, "y", "left_semi")
-    body = (
-        left.join(right, "y")
-        .filter(F.col("x") != F.col("z"))
-        .select("r1", "r2", "x", "z")
-        .distinct()
-    )
+    body, heads = _horn_body(statements, subj, rel, obj, max_mid_degree)
     r = (rules.filter(F.col("conf") >= min_conf)
          .select("r1", "r2", "r3", "conf").distinct())
     cand = body.join(F.broadcast(r), ["r1", "r2"])
-    heads = facts.select(F.col("r").alias("r3"), F.col("u").alias("x"),
-                         F.col("v").alias("z"))
     missing = cand.join(heads, ["r3", "x", "z"], "left_anti")
     return (
         missing.groupBy("x", "r3", "z")
@@ -2037,7 +1979,7 @@ def cycle_edges(
     Returns (u, v, cycle_len) for edges on a cycle, cycle_len >= 2.
     """
     e = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-         .filter(F.col(src) != F.col(dst)).distinct()
+         .filter(F.col("u") != F.col("v")).distinct()
          .transform(cut_lineage))
     reach = e.select(F.col("u").alias("a"), F.col("v").alias("b"),
                      F.lit(1).alias("hops"))
@@ -2130,16 +2072,10 @@ def clustering_coefficient(edges: DataFrame, src: str = "u",
 
     Returns (bel, degree, n_triangles, lcc)."""
     und = undirected_edges(edges, src, dst).transform(cut_lineage)
-    deg = (
-        und.select(F.col("a").alias("bel"))
-        .unionAll(und.select(F.col("b").alias("bel")))
-        .groupBy("bel")
-        .agg(F.count(F.lit(1)).alias("degree"))
-    )
-    tri = triangle_counts(edges, src, dst)
     return (
-        deg.filter(F.col("degree") >= 2)
-        .join(tri, "bel", "left")
+        _undirected_degree(und, "bel", "degree")
+        .filter(F.col("degree") >= 2)
+        .join(_node_triangles(und), "bel", "left")
         .select(
             "bel",
             F.col("degree").cast("long").alias("degree"),
@@ -2247,24 +2183,12 @@ def node2vec_walks(
     mult_mid = N2V_SCALE
     mult_far = int(round(q * N2V_SCALE))
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).distinct()
-    nodes = (e.select(F.col("u").alias("bel"))
-             .union(e.select("v")).distinct())
     walk_ids = F.array(*[F.lit(w) for w in range(walks_per_node)])
     from .ops.dedup import _pin
 
-    # step-0 transition: DeepWalk rule, hash string identical to
-    # random_walks at t=0 (twin table reuse)
-    h0 = F.xxhash64(F.concat_ws(
-        "|", F.col("u"), F.col("walk").cast("string"), F.lit("0"),
-        F.col("v")))
-    trans0 = (
-        e.select("u", "v", F.explode(walk_ids).alias("walk"))
-        .withColumn("rn", F.row_number().over(
-            Window.partitionBy("u", "walk").orderBy(h0.asc(),
-                                                    F.col("v").asc())))
-        .filter(F.col("rn") == 1)
-        .select(F.col("u").alias("node"), "walk", F.col("v").alias("nxt"))
-    )
+    # step-0 transition: random_walks' DeepWalk rule at t=0 (twin table
+    # reuse)
+    trans0 = _walk_transitions(e, walk_ids, F.array(F.lit(0)))
 
     # hub guard: nodes whose 2-path fanout d_in*d_out exceeds max_hub
     # leave the biased domain and get the prev-independent DeepWalk rule
@@ -2325,22 +2249,10 @@ def node2vec_walks(
     # (hub, walk, t) — d_out-linear where the biased table is d_in*d_out
     trans_hub = None
     if hubs is not None:
-        hH = F.xxhash64(F.concat_ws(
-            "|", F.col("u"), F.col("walk").cast("string"),
-            F.col("t").cast("string"), F.col("v")))
-        trans_hub = _pin(
-            e.join(hubs, "u", "left_semi")
-            .select("u", "v", F.explode(walk_ids).alias("walk"))
-            .select("u", "v", "walk", F.explode(steps).alias("t"))
-            .withColumn("rn", F.row_number().over(
-                Window.partitionBy("u", "walk", "t")
-                .orderBy(hH.asc(), F.col("v").asc())))
-            .filter(F.col("rn") == 1)
-            .select(F.col("u").alias("node"), "walk", "t",
-                    F.col("v").alias("nxt_h"))
-        )
+        trans_hub = _pin(_walk_transitions(
+            e.join(hubs, "u", "left_semi"), walk_ids, steps))
 
-    cur = nodes.select(
+    cur = _node_set(e).select(
         F.col("bel").alias("start"),
         F.explode(walk_ids).alias("walk"),
         F.col("bel").alias("node"),
@@ -2372,7 +2284,7 @@ def node2vec_walks(
                     ["prev", "node", "walk"], "left")
                 .join(
                     trans_hub.filter(F.col("t") == t)
-                    .select("node", "walk", "nxt_h"),
+                    .select("node", "walk", F.col("nxt").alias("nxt_h")),
                     ["node", "walk"], "left")
                 .select("start", "walk", F.col("node").alias("prev"),
                         F.coalesce("nxt", "nxt_h").alias("node"))

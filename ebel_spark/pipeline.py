@@ -82,18 +82,15 @@ def run_pipeline(
     mode: str = "force",
     resume: bool = False,
     materialize_modifiers: bool = False,
-    protein2gene: bool = True,
     enrich: bool = True,
     involved: bool = True,
     species: bool = True,
     with_hints: bool = True,
-    n_salts: int = 16,
     parse_partitions: int | None = None,
     dedup_source: bool = True,
     run_id: str | None = None,
     repair: bool = False,
     error_report: str | None = None,
-    path_filter: bool = True,
     output_format: str = "parquet",
     catalog: str | None = None,
 ) -> dict:
@@ -131,15 +128,14 @@ def run_pipeline(
         # NOTE this shuffles the full content column — when source
         # uniqueness is an ingest invariant (Iceberg upsert key, or a
         # synthetic corpus), pass dedup_source=False and skip that shuffle.
-        if path_filter:
-            # reference validate.py:237-249 only accepts `%.bel` paths from
-            # a directory; a mixed-language lakehouse table additionally
-            # carries a lang column.  Both predicates push down to the scan
-            # so non-BEL rows never reach the parse UDF.
-            src = src.filter(
-                F.col("path").endswith(".bel")
-                & (F.col("lang").isNull() | (F.col("lang") == "bel"))
-            )
+        # reference validate.py:237-249 only accepts `%.bel` paths from a
+        # directory; a mixed-language lakehouse table additionally carries
+        # a lang column.  Both predicates push down to the scan so non-BEL
+        # rows never reach the parse UDF.
+        src = src.filter(
+            F.col("path").endswith(".bel")
+            & (F.col("lang").isNull() | (F.col("lang") == "bel"))
+        )
         src = P.with_file_sha(src)
         if repair:
             # sha256 invariant stays on the ORIGINAL content (the row
@@ -271,8 +267,7 @@ def run_pipeline(
                 .select("node_id", *G.ROLLUP_FACTS)
             nodes = nodes.drop(*G.ROLLUP_FACTS)
         with stage("materialize.edges_stmt"):
-            edges_stmt = _ckpt(G.materialize_edges(st_valid, n_salts=n_salts),
-                               "edges_stmt")
+            edges_stmt = _ckpt(G.materialize_edges(st_valid), "edges_stmt")
             # p2g only probes which object_ids already have an incoming
             # translated_to/transcribed_to edge — a KB-sized projection
             p2g_probe = edges_stmt.filter(F.col("relation").isin(
@@ -285,15 +280,10 @@ def run_pipeline(
                                          "left_semi")),
                 "struct_edges")
 
-        if protein2gene:
-            with stage("materialize.p2g"):
-                nodes, p2g_edges = G.protein2gene(nodes, p2g_probe)
-                nodes = _ckpt(nodes, "nodes1")
-            edges = _align_edges(edges_stmt).unionByName(
-                _align_edges(p2g_edges))
-        else:
-            edges = _align_edges(edges_stmt)
-
+        with stage("materialize.p2g"):
+            nodes, p2g_edges = G.protein2gene(nodes, p2g_probe)
+            nodes = _ckpt(nodes, "nodes1")
+        edges = _align_edges(edges_stmt).unionByName(_align_edges(p2g_edges))
         all_edges = edges.unionByName(_align_edges(
             struct_edges.select("edge_id", "relation", "relation_category",
                                 "subject_id", "object_id", "document_ids",

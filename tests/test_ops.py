@@ -1549,6 +1549,14 @@ class TestHornRulesAndRrf:
         got2 = {(r.u, r.v): r.cycle_len
                 for r in G.cycle_edges(e, max_len=2).collect()}
         assert got2 == {("a", "b"): 2, ("b", "a"): 2}
+        # the same edges under other column names: the self-loop filter
+        # must compare the endpoints, not whatever `v` names after the
+        # rename to (u, v)
+        relabelled = e.select(F.col("u").alias("v"), F.col("v").alias("w"))
+        got3 = {(r.u, r.v): r.cycle_len
+                for r in G.cycle_edges(relabelled, max_len=4, src="v",
+                                       dst="w").collect()}
+        assert got3 == got
 
     def test_cycle_edges_shortest_wins_over_longer(self, spark):
         # a->b and b->a PLUS b->x->a: edge (a,b) is on both a 2-cycle

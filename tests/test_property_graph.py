@@ -1,5 +1,6 @@
 """Property-based checks (hypothesis) for the round-5 iterative graph
-ops: on random small graphs, the distributed DataFrame implementations
+ops and the triangle enumerator they share with triangle_counts,
+edge_support and clustering_coefficient: on random small graphs, the distributed DataFrame implementations
 must equal independent pure-Python reference implementations — a
 different failure surface than the hand-picked fixtures (random shapes
 find cascade/tie/bound edge cases humans don't draw).
@@ -7,6 +8,8 @@ find cascade/tie/bound edge cases humans don't draw).
 Example counts are kept small: every example runs real Spark jobs."""
 
 from __future__ import annotations
+
+from collections import Counter
 
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -99,6 +102,23 @@ def _py_shortest_cycles(edges, max_len):
     return out
 
 
+def _py_triangles(edges):
+    """Triangles of the undirected simple graph, pure Python.  Returns
+    (degree per node, triangles per node, triangles per canonical
+    a < b edge)."""
+    und = {tuple(sorted((u, v))) for u, v in edges if u != v}
+    nbrs = {}
+    for a, b in und:
+        nbrs.setdefault(a, set()).add(b)
+        nbrs.setdefault(b, set()).add(a)
+    tris = {tuple(sorted((a, b, c)))
+            for a, b in und for c in nbrs[a] & nbrs[b]}
+    per_node = Counter(n for t in tris for n in t)
+    per_edge = Counter(e for a, b, c in tris
+                       for e in ((a, b), (a, c), (b, c)))
+    return {n: len(s) for n, s in nbrs.items()}, per_node, per_edge
+
+
 class TestGraphOpsVsPythonReference:
     @_SETTINGS
     @given(weighted_edges_strategy)
@@ -127,3 +147,22 @@ class TestGraphOpsVsPythonReference:
         got = {(r["u"], r["v"]): r["cycle_len"]
                for r in G.cycle_edges(df, max_len=4).collect()}
         assert got == _py_shortest_cycles(edges, max_len=4)
+
+    @_SETTINGS
+    @given(edges_strategy)
+    def test_triangle_ops_match_python_count(self, spark, edges):
+        df = spark.createDataFrame(edges, ["u", "v"])
+        degree, per_node, per_edge = _py_triangles(edges)
+        got = {r["bel"]: r["n_triangles"]
+               for r in G.triangle_counts(df).collect()}
+        assert got == dict(per_node)
+        got = {(r["a"], r["b"]): r["support"]
+               for r in G.edge_support(df).collect()}
+        assert got == dict(per_edge)
+        rows = G.clustering_coefficient(df).collect()
+        assert {r["bel"]: (r["degree"], r["n_triangles"]) for r in rows} == {
+            n: (d, per_node[n]) for n, d in degree.items() if d >= 2}
+        for r in rows:
+            d = r["degree"]
+            assert r["lcc"] == pytest.approx(
+                2 * r["n_triangles"] / (d * (d - 1)), abs=1e-6)
